@@ -66,19 +66,22 @@ object SparkEntry {
   private def q(sql: String): (SparkSession, String) => DataFrame =
     (spark, dir) => { prep(spark, dir); spark.sql(sql) }
 
-  /** Temp dir deleted by a JVM shutdown hook. The harness queries (q61,
-    * q66) hand back DataFrames that read the dir LAZILY, so eager
-    * deletion would race the driver's materialization — exit-time
-    * cleanup keeps /tmp clean across repeated Verify runs without that
-    * hazard. */
-  private def scratchDir(prefix: String): String = {
-    val p = java.nio.file.Files.createTempDirectory(prefix)
+  /** The dirs [[scratchDir]] handed out, all deleted by ONE JVM shutdown
+    * hook registered on first use. The harness queries (q61, q66) hand
+    * back DataFrames that read the dir LAZILY, so eager deletion would
+    * race the driver's materialization — exit-time cleanup keeps /tmp
+    * clean across repeated Verify runs without that hazard. */
+  private lazy val scratchDirs = {
+    val dirs = java.util.concurrent.ConcurrentHashMap.newKeySet[java.io.File]()
     Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      try {
-        java.nio.file.Files.walk(p)
-          .sorted(java.util.Comparator.reverseOrder[java.nio.file.Path]())
-          .forEach(f => java.nio.file.Files.deleteIfExists(f))
-      } catch { case _: Throwable => () }))
+      dirs.forEach(d => org.apache.commons.io.FileUtils.deleteQuietly(d))))
+    dirs
+  }
+
+  /** Temp dir deleted at JVM exit (see [[scratchDirs]]). */
+  private def scratchDir(prefix: String): String = {
+    val p = java.nio.file.Files.createTempDirectory(prefix).toFile
+    scratchDirs.add(p)
     p.toString
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -71,7 +71,7 @@ object Retrieval {
         col("rnk").cast("int").as("rnk"))
   }
 
-  private def rz6(c: org.apache.spark.sql.Column) = graft.util.Round6.rz6(c)
+  private def rz6(c: Column) = graft.util.Round6.rz6(c)
 
   /** Rank-quality metrics for a retrieval run against graded relevance
     * judgments — the offline evaluation read every retrieval stack runs
@@ -109,64 +109,75 @@ object Retrieval {
     * jsDivergence discipline; log2 agrees across libms at 6dp).
     *
     * Scale design (100 TB): `results` is top-k-per-query-sized, never
-    * corpus-sized, and qrels are human-judgment-sized — both tiny. The
-    * joins are hash joins on (query, item); the windows are keyed by
-    * query. Evaluation cost is O(|Q| · k), corpus-free. */
+    * corpus-sized, and qrels are human-judgment-sized — both tiny. Each
+    * input is read ONCE: the judged rows and the cut results are tagged,
+    * unioned and grouped per query into two arrays, one aggregate whose
+    * exchange disappears when both inputs already arrive partitioned by
+    * query (a retriever's top-k window leaves its output that way). All
+    * five metrics are then computed map-only from the query's row: the
+    * ideal ranking is the judged array sorted (rel desc, id asc), and the
+    * relevance of each retrieved item is a lookup in the judged array,
+    * so no join, window or broadcast runs. The report (|Q| rows) then
+    * gathers into ONE partition, so sorting or collecting it downstream
+    * needs no range shuffle of its own. Evaluation cost is
+    * O(|Q| · k · judged-per-query), corpus-free. */
   def retrievalMetrics(results: DataFrame, qrels: DataFrame, k: Int,
       qidCol: String = "qid", idCol: String = "doc_id",
       rankCol: String = "rnk", relCol: String = "rel"): DataFrame = {
     require(k >= 1, s"k must be >= 1 (got $k)")
+    val noInt = lit(null).cast("int")
     val judged = qrels.select(col(qidCol).as("__q"), col(idCol).as("__i"),
-        col(relCol).cast("int").as("__rel"))
+        col(relCol).cast("int").as("__rel"), noInt.as("__r"))
       .where(col("__rel") > 0)
-    // n_rel and IDCG@k in ONE aggregate over the judged frame (r22:
-    // they were two separate aggregation pipelines + two joins; the
-    // ideal-rank window already partitions by query, so the group-by
-    // reuses its exchange and the gain sum just gates on rank <= k —
-    // identical values, one fewer aggregate and one fewer join). Every
-    // evaluable query has a rank-1 row, so the gated sum is never null.
-    val wI = Window.partitionBy("__q").orderBy(col("__rel").desc, col("__i").asc)
-    val relStats = judged.withColumn("__ir", row_number().over(wI))
-      .withColumn("__g", when(col("__ir") <= k,
-        rz6((pow(lit(2.0), col("__rel")) - 1.0) / log2(col("__ir") + 1))))
-      .groupBy("__q")
-      .agg(count(lit(1)).as("n_rel"),
-        sum(col("__g").cast("decimal(20,6)")).as("idcg"))
+    // a null query id never matches a judgment (the join semantics)
     val res = results.select(col(qidCol).as("__q"), col(idCol).as("__i"),
-        col(rankCol).cast("int").as("__r"))
-      .where(col("__r") <= k)
-    val wR = Window.partitionBy("__q").orderBy("__r")
-    // qrels are human-judgment-sized by contract (scale note above), so
-    // the relevance attach broadcasts: without the hint the planner
-    // staged both left-outer joins below as SortMergeJoins — each an
-    // exchange + sort of frames that are |Q|·k / judgment-set sized
-    // (r22; AQE left them SMJ because the shuffle stages were already
-    // materialized upstream)
-    val per = res.join(broadcast(judged), Seq("__q", "__i"), "left")
-      .withColumn("__rel", coalesce(col("__rel"), lit(0)))
-      .withColumn("__hit", (col("__rel") > 0).cast("int"))
-      .withColumn("__cum", sum("__hit").over(wR))
-      .withColumn("__g", rz6((pow(lit(2.0), col("__rel")) - 1.0) /
-        log2(col("__r") + 1)))
-      .withColumn("__p", when(col("__hit") === 1,
-        rz6(col("__cum").cast("double") / col("__r"))).otherwise(lit(0.0)))
-    val agg = per.groupBy("__q").agg(
-      sum("__hit").as("__hits"),
-      sum(col("__g").cast("decimal(20,6)")).as("__dcg"),
-      sum(col("__p").cast("decimal(20,6)")).as("__apnum"),
-      min(when(col("__hit") === 1, col("__r"))).as("__first"))
-    relStats.join(broadcast(agg), Seq("__q"), "left")
-      .select(col("__q").as(qidCol),
-        col("n_rel"),
-        coalesce(col("__hits"), lit(0L)).cast("int").as("n_ret_rel"),
-        rz6(coalesce(col("__hits"), lit(0L)).cast("double") / k).as("p_at_k"),
-        rz6(coalesce(col("__hits"), lit(0L)).cast("double") / col("n_rel"))
-          .as("recall_at_k"),
-        rz6(coalesce(lit(1.0) / col("__first"), lit(0.0))).as("rr"),
-        rz6(coalesce(col("__apnum"), lit(0).cast("decimal(20,6)"))
-          .cast("double") / least(col("n_rel"), lit(k))).as("ap"),
-        rz6(coalesce(col("__dcg"), lit(0).cast("decimal(20,6)"))
-          .cast("double") / col("idcg").cast("double")).as("ndcg"))
+        noInt.as("__rel"), col(rankCol).cast("int").as("__r"))
+      .where(col("__r") <= k && col("__q").isNotNull)
+    val perQ = judged.unionByName(res).groupBy("__q").agg(
+        collect_list(when(col("__rel").isNotNull,
+          struct(col("__rel").as("rel"), col("__i").as("i")))).as("__js"),
+        collect_list(when(col("__r").isNotNull,
+          struct(col("__r").as("r"), col("__i").as("i")))).as("__rs"))
+      .where(size(col("__js")) > 0)
+    val dec = org.apache.spark.sql.types.DecimalType(30, 6)
+    // DCG/AP sums: 6dp-snapped terms accumulated as exact decimals, the
+    // same values a decimal(20,6)-cast SUM aggregate yields
+    def decSum(terms: Column) =
+      aggregate(terms, lit(0).cast(dec), (acc, t) =>
+        (acc + t.cast("decimal(20,6)")).cast(dec))
+    def gain(rel: Column, rank: Column) =
+      rz6((pow(lit(2.0), rel) - 1.0) / log2(rank + 1))
+    // the result rows with their grades attached: one row per matching
+    // judgment (grade 0 when none) — the left-join rows, per query
+    val graded = flatten(transform(col("__rs"), r => {
+      val m = filter(col("__js"), j => j("i") === r("i"))
+      when(size(m) === 0, array(struct(r("r").as("r"), lit(0).as("rel"))))
+        .otherwise(transform(m, j => struct(r("r").as("r"), j("rel").as("rel"))))
+    }))
+    // IDCG@k: the judged grades in ideal order (rel desc, id asc)
+    val ideal = slice(sort_array(transform(col("__js"),
+      j => struct((-j("rel")).as("nrel"), j("i").as("i")))), 1, k)
+    val agg = perQ.select(col("__q"), size(col("__js")).cast("long").as("n_rel"),
+        decSum(transform(ideal, (j, ix) => gain(-j("nrel"), ix + 1))).as("__idcg"),
+        filter(graded, g => g("rel") > 0).as("__hit"), graded.as("__g"))
+      .select(col("__q"), col("n_rel"), col("__idcg"),
+        size(col("__hit")).as("__hits"),
+        decSum(transform(col("__g"), g => gain(g("rel"), g("r")))).as("__dcg"),
+        // AP numerator: precision at each hit's rank, counting every hit
+        // ranked at or above it (ties in rank included)
+        decSum(transform(col("__hit"), h => rz6(
+          size(filter(col("__hit"), o => o("r") <= h("r"))).cast("double") / h("r"))))
+          .as("__apnum"),
+        array_min(transform(col("__hit"), h => h("r"))).as("__first"))
+    agg.select(col("__q").cast(qrels.schema(qidCol).dataType).as(qidCol),
+      col("n_rel"),
+      col("__hits").as("n_ret_rel"),
+      rz6(col("__hits").cast("double") / k).as("p_at_k"),
+      rz6(col("__hits").cast("double") / col("n_rel")).as("recall_at_k"),
+      rz6(coalesce(lit(1.0) / col("__first"), lit(0.0))).as("rr"),
+      rz6(col("__apnum").cast("double") / least(col("n_rel"), lit(k))).as("ap"),
+      rz6(col("__dcg").cast("double") / col("__idcg").cast("double")).as("ndcg"))
+      .repartition(1)
   }
 
   /** Late-interaction (MaxSim) scoring — the ColBERT retrieval law
@@ -206,12 +217,19 @@ object Retrieval {
     val q = broadcast(queries.select(col(qidCol).as("__qid"),
       col(qvecsCol).as("__qvs")))
     val d = docs.select(col(didCol).as("__did"), col(dvecsCol).as("__dvs"))
+    topKByMaxSim(q.join(d, lit(true)), k, qidCol, didCol)
+  }
+
+  /** Score (__qid, __qvs, __did, __dvs) pair rows by MaxSim, drop
+    * degenerate bags, and keep each query's top `k` by (score desc, doc
+    * id asc): the shared tail of both MaxSim operators. */
+  private def topKByMaxSim(pairs: DataFrame, k: Int, qidCol: String,
+      didCol: String): DataFrame = {
     val score = aggregate(col("__qvs"), lit(0.0), (acc, qv) =>
       acc + rz6(aggregate(col("__dvs"), lit(-1.0), (best, dv) =>
         greatest(best, graft.functions.GeoFunctions.vec_cosine(qv, dv)))))
     val w = Window.partitionBy("__qid").orderBy(col("score").desc, col("__did").asc)
-    q.join(d, lit(true))
-      .where(size(col("__qvs")) >= 1 && size(col("__dvs")) >= 1)
+    pairs.where(size(col("__qvs")) >= 1 && size(col("__dvs")) >= 1)
       .withColumn("score", rz6(score))
       .withColumn("rnk", row_number().over(w)).where(col("rnk") <= k)
       .select(col("__qid").as(qidCol), col("__did").as(didCol),
@@ -221,13 +239,17 @@ object Retrieval {
   /** [[maxSimTopK]] restricted to candidate pairs — the production
     * two-stage shape: `cands` is (qidCol, didCol) from a first-stage
     * retriever (IVF over pooled vectors, BM25, RRF fusion), and only
-    * those pairs pay the MaxSim kernel. Join order: candidates (top-k
-    * sized — lists·k·|Q| id pairs, the same size class as the already-
-    * broadcast query batch) BROADCAST against their documents' vector
-    * bags, then the broadcast query bags attach — the doc-bag frame is
-    * probed map-side and never shuffled (r22: without the hint the
-    * planner staged both sides of the __did join for a sort-merge
-    * exchange, shuffling the corpus-sized bag frame by doc id).
+    * those pairs pay the MaxSim kernel. Stages: the distinct candidates
+    * (top-k sized — lists·k·|Q| id pairs, the same size class as the
+    * query batch) BROADCAST against their documents' vector bags, so the
+    * corpus-sized bag frame is probed map-side and never shuffled; the
+    * query bags attach through a broadcast of their own, which depends
+    * on nothing upstream and builds while the first stage still runs;
+    * the score is computed in the same map-side pass (each cosine
+    * evaluated once), and the top-k window is the one exchange, keyed by
+    * query. Routing the query bags through a per-query exchange instead
+    * saves that leaf broadcast but costs an aggregate and two generators,
+    * about 20 more generated classes per call, and measured slower.
     * Null/empty vector bags are filtered before ranking
     * ([[maxSimTopK]]'s degenerate-bag rule). */
   def maxSimRerank(queries: DataFrame, docs: DataFrame, cands: DataFrame,
@@ -241,14 +263,6 @@ object Retrieval {
         Seq("__did"))
       .join(broadcast(queries.select(col(qidCol).as("__qid"),
         col(qvecsCol).as("__qvs"))), Seq("__qid"))
-      .where(size(col("__qvs")) >= 1 && size(col("__dvs")) >= 1)
-    val score = aggregate(col("__qvs"), lit(0.0), (acc, qv) =>
-      acc + rz6(aggregate(col("__dvs"), lit(-1.0), (best, dv) =>
-        greatest(best, graft.functions.GeoFunctions.vec_cosine(qv, dv)))))
-    val w = Window.partitionBy("__qid").orderBy(col("score").desc, col("__did").asc)
-    pairs.withColumn("score", rz6(score))
-      .withColumn("rnk", row_number().over(w)).where(col("rnk") <= k)
-      .select(col("__qid").as(qidCol), col("__did").as(didCol),
-        col("score"), col("rnk").cast("int").as("rnk"))
+    topKByMaxSim(pairs, k, qidCol, didCol)
   }
 }

@@ -849,76 +849,75 @@ object TextAnalysis {
     * order). ln agreement at 6dp across libm implementations follows the
     * [[dsirWeights]] precedent.
     *
-    * Scale design (100 TB): the corpus-side lineage is one hash-agg to
-    * postings (shuffle keyed (doc, term)) plus one map-only pass that
-    * yields BOTH corpus scalars (N over distinct ids, avgdl mass — all
-    * lazy, riding a single broadcast 1-row frame, no driver job), a
-    * window doc-length sum over the
-    * already-aggregated postings (bounded by distinct-terms-per-doc,
-    * never corpus bytes), and a term-keyed join against the BROADCAST
-    * query-term/idf table — |queries|·|terms| rows, built by semi-joining
-    * the distributed df-counts down to the query vocabulary first, so
-    * the full vocabulary is never broadcast or collected. Only postings
-    * that match a query term reach the (query, doc) score aggregate;
-    * the final per-query top-k is a rank-pushdown window keyed by query
-    * (a hot query's candidate set is its matched-postings count — salt
-    * via [[SkewJoin]] if one query matches most of the corpus). Corpus
-    * text never rides any exchange; `queries` must be broadcast-small
-    * (retrieval batches, not a second corpus — for corpus×corpus
-    * similarity use [[winnowSharedPairs]] or MinHash). */
+    * Scale design (100 TB): the corpus is scanned once. Each document
+    * row explodes into its tokens plus one "" sentinel row carrying its
+    * token count, and a left join against the BROADCAST query terms
+    * (|queries|·|terms| rows) keeps only the sentinel and the query-term
+    * occurrences — map-side, so the corpus vocabulary never reaches an
+    * exchange and corpus text never rides one. One id-keyed aggregate
+    * folds each document to (dl, its matched (query, term) occurrences);
+    * it needs no exchange when the corpus already arrives
+    * hash-partitioned by id, and otherwise shuffles ids, counts and query
+    * terms once, a shuffle both branches below read. From that
+    * per-document frame two branches run side by side: the corpus
+    * scalars (N over distinct ids, empty documents included, and the
+    * postings mass for avgdl) as one global aggregate riding a broadcast
+    * 1-row frame, and the matched postings, shuffled ONCE by query.
+    * Everything after that shuffle is query-local: df_t is a window count
+    * over the query's postings of t (a document holds at most one posting
+    * per (query, term)), and the (query, doc) score sum and the
+    * rank-pushdown top-k window reuse the same partitioning. No broadcast
+    * is built on top of another. A hot query's candidate set is its
+    * matched-postings count — salt via [[SkewJoin]] if one query matches
+    * most of the corpus. `queries` must be broadcast-small (retrieval
+    * batches, not a second corpus — for corpus×corpus similarity use
+    * [[winnowSharedPairs]] or MinHash) with one row per query id. */
   def bm25TopK(df: DataFrame, idCol: String, textCol: String,
       queries: DataFrame, qidCol: String, qtextCol: String, k: Int,
       k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(k > 0, "k must be positive")
     require(k1 >= 0 && b >= 0 && b <= 1, s"need k1 >= 0, 0 <= b <= 1 (got $k1, $b)")
-    val postings = df
-      .select(col(idCol).as("__id"),
-        explode(split(coalesce(col(textCol).cast("string"), lit("")), " ")).as("__tok"))
-      .where(col("__tok") =!= "")
-      .groupBy("__id", "__tok").agg(count(lit(1)).as("__tf"))
-    // doc length as a window over the postings — no second corpus scan,
-    // partition size bounded by distinct terms per doc
-    val wDoc = org.apache.spark.sql.expressions.Window.partitionBy("__id")
-    val withDl = postings.withColumn("__dl", sum("__tf").over(wDoc))
+    def tokens(c: String) = split(coalesce(col(c).cast("string"), lit("")), " ")
+    // (query, distinct term) rows, flagged so a match is told apart from
+    // a miss even under a null query id
     val qterms = queries
-      .select(col(qidCol).as("__qid"),
-        explode(array_distinct(
-          split(coalesce(col(qtextCol).cast("string"), lit("")), " "))).as("__tok"))
+      .select(col(qidCol).as("__qid"), explode(array_distinct(tokens(qtextCol))).as("__tok"))
       .where(col("__tok") =!= "")
-    // distributed df-counts semi-joined down to the query vocabulary,
-    // THEN broadcast: |q terms| rows, never the corpus vocabulary.
-    // (qid, tok, df) ship together — the idf is computed INLINE on the
-    // contrib row from (df, n) rather than in a separate broadcast
-    // frame layered over this one: idf is a deterministic rz6'd
-    // function of (df, n), so per-row evaluation is value-identical
-    // and one nested broadcast build job disappears (r21). The query-
-    // vocabulary prune sits BELOW the df aggregation (r22): df_t is the
-    // per-token postings-row count, so dropping non-query tokens first
-    // leaves every surviving count identical while the hash agg carries
-    // |q terms| keys instead of the corpus vocabulary
-    val qdf = broadcast(
-      qterms.join(
-        broadcast(postings
-          .join(broadcast(qterms.select("__tok").distinct()), Seq("__tok"))
-          .groupBy("__tok").agg(count(lit(1)).as("__df"))),
-        Seq("__tok")))
-    // corpus scalars as ONE broadcast 1-row frame (NOT a driver
-    // count(): the whole retrieval stays one lazy plan) — N over ALL
-    // distinct doc ids (empty ones too), avgdl = 6dp quotient of total
-    // postings mass over N. r22: previously two frames (nDf from a
-    // distinct+count scan, avgdl mass re-running the (doc, tok)
-    // aggregation); the per-row token count is sum(tf) by definition,
-    // so one map-only pass + id-keyed agg yields both scalars and one
-    // corpus scan, one full (doc, tok) hash agg, and one broadcast
-    // build drop out — values identical
-    val statsDf = broadcast(
-      df.select(col(idCol).as("__id"),
-          size(filter(split(coalesce(col(textCol).cast("string"), lit("")), " "),
-            t => t =!= "")).as("__ntok"))
-        .groupBy("__id").agg(sum("__ntok").as("__dtok"))
-        .agg(count(lit(1)).cast("double").as("__n"), sum("__dtok").as("__mass"))
-        .select(col("__n"), rz6(col("__mass") / col("__n")).as("__avgdl")))
-    val contrib = withDl.join(qdf, Seq("__tok")).crossJoin(statsDf)
+      .withColumn("__hit", lit(true))
+    // every document row explodes into a "" sentinel carrying its token
+    // count plus its tokens; the left join keeps the sentinel (real
+    // tokens are never "") and the query-term occurrences only
+    val perDoc = df
+      .select(col(idCol).as("__id"), filter(tokens(textCol), t => t =!= "").as("__ts"))
+      .select(col("__id"), size(col("__ts")).as("__ntok"),
+        explode(concat(array(lit("")), col("__ts"))).as("__tok"))
+      .join(broadcast(qterms), Seq("__tok"), "left")
+      .where(col("__tok") === "" || col("__hit").isNotNull)
+      .groupBy("__id").agg(
+        sum(when(col("__tok") === "", col("__ntok"))).as("__dl"),
+        collect_list(when(col("__tok") =!= "", struct(col("__qid"), col("__tok"))))
+          .as("__m"))
+    // one row per (document, matched query term) with its tf — or one
+    // row with a null term for a document that matched nothing, so the
+    // same frame also carries every document's dl exactly once
+    val perTerm = perDoc
+      .select(col("__id"), col("__dl"), col("__m"),
+        posexplode_outer(array_distinct(col("__m"))).as(Seq("__pos", "__qt")))
+      .select(col("__qt.__qid").as("__qid"), col("__qt.__tok").as("__tok"),
+        col("__id"), col("__dl"), col("__pos"),
+        size(filter(col("__m"), o => o === col("__qt"))).cast("long").as("__tf"))
+    // corpus scalars: N over ALL distinct ids (empty ones too), avgdl =
+    // 6dp quotient of the postings mass over N
+    val first = coalesce(col("__pos"), lit(0)) === 0
+    val stats = broadcast(perTerm
+      .agg(count(when(first, lit(1))).cast("double").as("__n"),
+        sum(when(first, col("__dl"))).as("__mass"))
+      .select(col("__n"), rz6(col("__mass") / col("__n")).as("__avgdl")))
+    val postings = perTerm.where(col("__pos").isNotNull).repartition(col("__qid"))
+    val contrib = postings
+      .withColumn("__df", count(lit(1)).over(
+        org.apache.spark.sql.expressions.Window.partitionBy("__qid", "__tok")))
+      .crossJoin(stats)
       .select(col("__qid"), col("__id"),
         rz6(rz6(log(lit(1.0) +
             (col("__n") - col("__df") + lit(0.5)) /

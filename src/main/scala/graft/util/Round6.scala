@@ -1,7 +1,7 @@
 package graft.util
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.functions.{abs, floor, lit, signum}
+import org.apache.spark.sql.graft.{Rz6, Shims}
 
 /** The 6-decimal-place rounding law of the cross-engine determinism
   * contract: half-AWAY-from-zero on the scaled binary value,
@@ -28,11 +28,16 @@ import org.apache.spark.sql.functions.{abs, floor, lit, signum}
   * the final snap — the foundation of every reproducible aggregate in
   * the contract. */
 object Round6 {
-  def rz6(c: Column): Column =
-    signum(c) * floor(abs(c) * 1e6 + lit(0.5)) / 1e6
+  /** The law as one expression node ([[org.apache.spark.sql.graft.Rz6]]):
+    * the argument is evaluated once, however deeply rz6 nests. */
+  def rz6(c: Column): Column = Shims.column(Rz6(Shims.expression(c)))
 
-  /** Driver-side twin of [[rz6]] — bit-identical arithmetic
-    * (`math.rint` would be HALF_EVEN and fork the replay). */
+  /** [[rz6]]'s per-row kernel and its driver-side twin:
+    * `signum(x)·floor(|x|·1e6 + 0.5)/1e6` with the floor taken to a long,
+    * as Spark's `floor` on a double returns — bit-identical to the Column
+    * formula `signum(c) * floor(abs(c) * 1e6 + 0.5) / 1e6` on every
+    * double, NaN and ±Inf included (the long saturates, so rz6(+Inf) is
+    * 2⁶³/1e6). `math.rint` would be HALF_EVEN and fork the replay. */
   def rz6d(x: Double): Double =
-    math.signum(x) * math.floor(math.abs(x) * 1e6 + 0.5) / 1e6
+    (math.signum(x) * math.floor(math.abs(x) * 1e6 + 0.5).toLong.toDouble) / 1e6
 }

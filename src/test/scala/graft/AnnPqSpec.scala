@@ -5,7 +5,6 @@ import graft.operators.Ann
 import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** IVF-PQ: product-quantized inverted lists (m one-byte codes per
@@ -13,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * algebra (encode/LUT/ADC/reconstruct are mutually consistent), the
   * search contract (full probing + full rerank reproduces brute force
   * exactly), and the persisted round trip. */
-class AnnPqSpec extends AnyFunSuite with BeforeAndAfterAll {
+class AnnPqSpec extends AnyFunSuite with TempDirs {
 
   private var spark: SparkSession = _
 
@@ -26,7 +25,8 @@ class AnnPqSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("ERROR")
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try if (spark != null) spark.stop() finally super.afterAll()
 
   private def arr(v: Array[Float]) = new GenericArrayData(v.map(x => x: Any))
 
@@ -93,7 +93,7 @@ class AnnPqSpec extends AnyFunSuite with BeforeAndAfterAll {
     val extra = emb.where(col("vec_id") % 3 === 2)
     val queries = emb.where(col("vec_id") < 4)
     val built = Ann.buildIvf(base, nlist = 8)
-    val dir = java.nio.file.Files.createTempDirectory("ivf_append_").toString
+    val dir = tempDir("ivf_append_").toString
     Ann.writeIvfIndex(built, dir)
     Ann.appendToIvfIndex(spark, dir, extra)
     val loaded = Ann.readIvfIndex(spark, dir)
@@ -133,7 +133,7 @@ class AnnPqSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (residual <- Seq(false, true)) {
       val built = Ann.buildIvfPq(base, nlist = 8, m = 16, ksub = 64,
         byResidual = residual)
-      val dir = java.nio.file.Files.createTempDirectory("ivfpq_append_").toString
+      val dir = tempDir("ivfpq_append_").toString
       Ann.writeIvfPqIndex(built, dir)
       Ann.appendToIvfPqIndex(spark, dir, extra)
       val loaded = Ann.readIvfPqIndex(spark, dir)
@@ -248,7 +248,7 @@ class AnnPqSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(mRes < mPlain,
       f"residual reconstruction MSE $mRes%.6f not below plain $mPlain%.6f")
     // persisted round trip preserves the residual flag and the results
-    val dir = java.nio.file.Files.createTempDirectory("pqres").toString + "/idx"
+    val dir = tempDir("pqres").toString + "/idx"
     Ann.writeIvfPqIndex(res, dir)
     val loaded = Ann.readIvfPqIndex(spark, dir)
     assert(loaded.residual)
@@ -261,7 +261,7 @@ class AnnPqSpec extends AnyFunSuite with BeforeAndAfterAll {
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.where(col("vec_id") < 5)
     val idx = Ann.buildIvfPq(emb, nlist = 8, m = 8, ksub = 16)
-    val dir = java.nio.file.Files.createTempDirectory("pqidx").toString + "/idx"
+    val dir = tempDir("pqidx").toString + "/idx"
     Ann.writeIvfPqIndex(idx, dir)
     val loaded = Ann.readIvfPqIndex(spark, dir)
     assert(loaded.codebook.m == idx.codebook.m &&

@@ -3,13 +3,12 @@ package graft
 import graft.operators.TextAnalysis
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Persisted BM25 index: indexed retrieval ≡ in-memory bm25TopK
   * row-for-row, partition pruning really skips unprobed token buckets,
   * sidecar integrity. */
-class Bm25IndexSpec extends AnyFunSuite with BeforeAndAfterAll {
+class Bm25IndexSpec extends AnyFunSuite with TempDirs {
 
   private var spark: SparkSession = _
 
@@ -22,7 +21,8 @@ class Bm25IndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("ERROR")
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try if (spark != null) spark.stop() finally super.afterAll()
 
   private def docs = spark.read
     .parquet("/root/testdata/sf0.001/documents.parquet")
@@ -37,7 +37,7 @@ class Bm25IndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("indexed retrieval reproduces bm25TopK row-for-row") {
-    val dir = java.nio.file.Files.createTempDirectory("bm25_").toString
+    val dir = tempDir("bm25_").toString
     TextAnalysis.writeBm25Index(docs, "doc_id", "text", dir)
     val mem = TextAnalysis.bm25TopK(docs, "doc_id", "text",
         queriesDf, "qid", "qtext", k = 10)
@@ -50,7 +50,7 @@ class Bm25IndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("probe prunes to the query tokens' buckets (corrupt unprobed, still works)") {
-    val dir = java.nio.file.Files.createTempDirectory("bm25_p_").toString
+    val dir = tempDir("bm25_p_").toString
     TextAnalysis.writeBm25Index(docs, "doc_id", "text", dir, buckets = 16)
     val q1 = queriesDf.where(col("qid") === 0L)
     val probed = q1
@@ -78,10 +78,10 @@ class Bm25IndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("append-grown index scores identically to a one-shot index of the union") {
     val h1 = docs.where(col("doc_id") % 3 =!= 2)
     val h2 = docs.where(col("doc_id") % 3 === 2)
-    val grown = java.nio.file.Files.createTempDirectory("bm25_g_").toString
+    val grown = tempDir("bm25_g_").toString
     TextAnalysis.writeBm25Index(h1, "doc_id", "text", grown)
     TextAnalysis.appendToBm25Index(spark, grown, h2, "doc_id", "text")
-    val oneShot = java.nio.file.Files.createTempDirectory("bm25_o_").toString
+    val oneShot = tempDir("bm25_o_").toString
     TextAnalysis.writeBm25Index(docs, "doc_id", "text", oneShot)
     def run(dir: String) = TextAnalysis.bm25SearchIndex(spark, dir,
         queriesDf, "qid", "qtext", k = 10)
@@ -96,7 +96,7 @@ class Bm25IndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     // write actions (r22); a leaked cache entry would accumulate
     // executor memory across builds in a long-lived session
     val before = spark.sparkContext.getPersistentRDDs.keySet
-    val dir = java.nio.file.Files.createTempDirectory("bm25_l_").toString
+    val dir = tempDir("bm25_l_").toString
     TextAnalysis.writeBm25Index(docs.where(col("doc_id") % 3 =!= 2),
       "doc_id", "text", dir)
     TextAnalysis.appendToBm25Index(spark, dir,
@@ -108,7 +108,7 @@ class Bm25IndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("all-OOV and empty query batches return empty, not error") {
     val sp = spark
     import sp.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("bm25_e_").toString
+    val dir = tempDir("bm25_e_").toString
     TextAnalysis.writeBm25Index(docs, "doc_id", "text", dir)
     val oov = Seq((9L, "zzzz qqqq")).toDF("qid", "qtext")
     assert(TextAnalysis.bm25SearchIndex(spark, dir, oov, "qid", "qtext", 5)
@@ -119,7 +119,7 @@ class Bm25IndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("missing sidecar fails loudly") {
-    val dir = java.nio.file.Files.createTempDirectory("bm25_m_").toString
+    val dir = tempDir("bm25_m_").toString
     intercept[java.io.IOException] {
       TextAnalysis.bm25SearchIndex(spark, dir, queriesDf, "qid", "qtext", 5)
     }

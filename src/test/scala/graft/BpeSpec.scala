@@ -2,10 +2,9 @@ package graft
 
 import graft.operators.Bpe
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BpeSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -13,7 +12,8 @@ class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit =
+    try spark.stop() finally super.afterAll()
 
   test("learnFromCounts reproduces the classic Sennrich example merges") {
     // newest/widest share (e,s) and (s,t) at 9 each -> lexicographic
@@ -69,14 +69,15 @@ class BpeSpec extends AnyFunSuite with BeforeAndAfterAll {
     val docs = Seq((0L, "low lower newest"), (1L, "newest newest"))
       .toDF("doc_id", "text")
     val merges = Bpe.learn(docs, "text", numMerges = 3)
-    val dir = java.nio.file.Files.createTempDirectory("bpe_merges").toString
+    val dir = tempDir("bpe_merges").toString
     Bpe.saveMerges(docs, merges, dir)
     assert(Bpe.loadMerges(spark, dir) == merges)
     // corrupt: drop rank 2 -> gap must throw
     val df = spark.read.parquet(dir).where("rank <> 2")
-    df.write.mode("overwrite").parquet(dir + "_cut")
+    val cut = tempDir("bpe_merges_cut").toString
+    df.write.mode("overwrite").parquet(cut)
     val e = intercept[IllegalArgumentException] {
-      Bpe.loadMerges(spark, dir + "_cut")
+      Bpe.loadMerges(spark, cut)
     }
     assert(e.getMessage.contains("gaps"))
   }

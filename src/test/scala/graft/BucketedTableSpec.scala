@@ -2,13 +2,12 @@ package graft
 
 import graft.sources.BucketedTable
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-class BucketedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
+class BucketedTableSpec extends AnyFunSuite with TempDirs {
 
   private val warehouse =
-    java.nio.file.Files.createTempDirectory("graft_bucket_wh").toString
+    tempDir("graft_bucket_wh").toString
 
   private lazy val spark: SparkSession = {
     // the warehouse + broadcast configs are load-bearing: a leftover
@@ -35,7 +34,8 @@ class BucketedTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     BucketedTable.writeBucketed(b, "bt_b", "k", numBuckets = 8)
   }
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit =
+    try spark.stop() finally super.afterAll()
 
   test("same-bucketed tables join with ZERO exchanges and correct rows") {
     import spark.implicits._

@@ -2,24 +2,24 @@ package graft
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** FsIO sidecar + directory primitives: atomic string write/read
   * degradation, and swapDir's documented contract (kept for unversioned
   * in-place replacement; the index families use publishVersion, specced
   * in IndexVersioningSpec). */
-class FsIOSpec extends AnyFunSuite with BeforeAndAfterAll {
+class FsIOSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[2]")
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit =
+    try spark.stop() finally super.afterAll()
 
   private def scratch(): java.nio.file.Path =
-    java.nio.file.Files.createTempDirectory("fsio")
+    tempDir("fsio")
 
   test("writeStringAtomic overwrites in place; readString degrades to None") {
     val root = scratch()

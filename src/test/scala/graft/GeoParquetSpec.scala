@@ -3,10 +3,9 @@ package graft
 import graft.sources.GeoParquet
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-class GeoParquetSpec extends AnyFunSuite with BeforeAndAfterAll {
+class GeoParquetSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -14,10 +13,11 @@ class GeoParquetSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit =
+    try spark.stop() finally super.afterAll()
 
   private def tmp(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString
+    tempDir(prefix).toString
 
   private def pointsDf(n: Int) = {
     graft.functions.GeoFunctions.register(spark)

@@ -4,10 +4,9 @@ import graft.functions.GeoFunctions
 import graft.sources.GeoTable
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-class GeoTableSpec extends AnyFunSuite with BeforeAndAfterAll {
+class GeoTableSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -15,11 +14,12 @@ class GeoTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit =
+    try spark.stop() finally super.afterAll()
 
   test("location-clustered write + bbox sidecar prunes files for spatial reads") {
     GeoFunctions.register(spark)
-    val dir = java.nio.file.Files.createTempDirectory("geotable").toString
+    val dir = tempDir("geotable").toString
     // 1000 points along a 0..999 diagonal — clustered files get disjoint ranges
     val df = spark.sql("""
       SELECT id, ST_GeomFromText('POINT(' || CAST(id AS STRING) || ' ' || CAST(id AS STRING) || ')') AS geom
@@ -50,7 +50,7 @@ class GeoTableSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("corrupt sidecar falls back to a full read instead of dropping data") {
     GeoFunctions.register(spark)
-    val dir = java.nio.file.Files.createTempDirectory("geotable_corrupt").toString
+    val dir = tempDir("geotable_corrupt").toString
     val df = spark.sql("""
       SELECT id, ST_GeomFromText('POINT(' || CAST(id AS STRING) || ' 0)') AS geom
       FROM range(0, 100) t(id)""")
@@ -73,7 +73,7 @@ class GeoTableSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("ndjson GeoJSON source roundtrips geometries and typed properties") {
     GeoFunctions.register(spark)
-    val dir = java.nio.file.Files.createTempDirectory("geojson_src").toString
+    val dir = tempDir("geojson_src").toString
     val df = spark.sql("""
       SELECT id, 'n"ame' || CAST(id AS STRING) AS label,
              ST_GeomFromText(CASE WHEN id % 2 = 0
@@ -97,7 +97,7 @@ class GeoTableSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("GeoJSON source: null geometries survive the roundtrip; strict read rejects junk") {
     GeoFunctions.register(spark)
-    val dir = java.nio.file.Files.createTempDirectory("geojson_null").toString
+    val dir = tempDir("geojson_null").toString
     val df = spark.sql("""
       SELECT id, CASE WHEN id % 3 = 0 THEN CAST(NULL AS BINARY)
                       ELSE ST_GeomFromText('POINT(' || CAST(id AS STRING) || ' 1)') END AS geom
@@ -109,7 +109,7 @@ class GeoTableSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(back.where(col("geom").isNull).count() == 3)
 
     // corrupt line: lenient read skips it, strict read fails the job
-    val junkDir = java.nio.file.Files.createTempDirectory("geojson_junk").toString
+    val junkDir = tempDir("geojson_junk").toString
     java.nio.file.Files.write(java.nio.file.Paths.get(junkDir, "part-0.txt"),
       ("""{"type": "Feature", "geometry": {"type": "Point", "coordinates": [1,2]}, "properties": {}}""" +
         "\n{\"broken\n\n").getBytes)

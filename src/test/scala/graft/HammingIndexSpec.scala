@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Persisted hamming/simhash index (Dedup.writeHammingIndex family):
@@ -10,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * over (history ∪ batch) restricted to batch-touching pairs, appends
   * must use the index's recorded band law, and compaction must merge
   * band shards without changing a probe. */
-class HammingIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
+class HammingIndexSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -18,10 +17,11 @@ class HammingIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit =
+    try spark.stop() finally super.afterAll()
 
   private def scratch(): String =
-    java.nio.file.Files.createTempDirectory("hamidx").toString + "/idx"
+    tempDir("hamidx").toString + "/idx"
 
   // near-dup families: base sentences with 0-2 word substitutions — the
   // same corpus shape simhashNearDups is specced on
@@ -70,7 +70,7 @@ class HammingIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val h = docs.where(col("doc_id") % 3 === 0)
     val b1 = docs.where(col("doc_id") % 3 === 1)
     val b2 = docs.where(col("doc_id") % 3 === 2)
-    val root = java.nio.file.Files.createTempDirectory("simloop").toString
+    val root = tempDir("simloop").toString
     val idx = s"$root/idx"; val reg = s"$root/reg"; val snap = s"$root/snap"
     graft.operators.Dedup.writeSimhashIndex(h, "doc_id", "text", idx, bands = 4)
     graft.operators.Dedup.writeRegistry(

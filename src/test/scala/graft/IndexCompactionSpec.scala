@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Compaction of persisted indexes (BM25 / LSH / IVF / IVF-PQ): the two
@@ -10,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * before and after must be row-identical — and (2) it actually merges
   * the append shards: every partition directory (pt= / band= / list=)
   * ends with exactly ONE data file, where appends had left several. */
-class IndexCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
+class IndexCompactionSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -18,10 +17,11 @@ class IndexCompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit =
+    try spark.stop() finally super.afterAll()
 
   private def scratch(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString + "/idx"
+    tempDir(prefix).toString + "/idx"
 
   /** the ACTIVE version directory of a versioned index root */
   private def dataDir(path: String): String =

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The versioned index roots (FsIO.indexDataDir / nextVersionDir /
@@ -12,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * planned (or executed) during a compaction failed spuriously; under
   * the pointer scheme a reader resolves its version once and that
   * version survives until a SECOND publish garbage-collects it. */
-class IndexVersioningSpec extends AnyFunSuite with BeforeAndAfterAll {
+class IndexVersioningSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -20,10 +19,11 @@ class IndexVersioningSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit =
+    try spark.stop() finally super.afterAll()
 
   private def scratch(prefix: String): String =
-    java.nio.file.Files.createTempDirectory(prefix).toString + "/idx"
+    tempDir(prefix).toString + "/idx"
 
   private def versions(path: String): Seq[String] =
     Option(new java.io.File(path).listFiles()).getOrElse(Array.empty)

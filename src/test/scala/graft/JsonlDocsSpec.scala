@@ -2,10 +2,9 @@ package graft
 
 import graft.sources.JsonlDocs
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-class JsonlDocsSpec extends AnyFunSuite with BeforeAndAfterAll {
+class JsonlDocsSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -13,10 +12,11 @@ class JsonlDocsSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit =
+    try spark.stop() finally super.afterAll()
 
   private def scratch(): String =
-    java.nio.file.Files.createTempDirectory("jsonl_spec").toString
+    tempDir("jsonl_spec").toString
 
   test("roundtrip preserves rows and the RECORDED schema, not inference") {
     import spark.implicits._

@@ -3,7 +3,6 @@ package graft
 import graft.operators.Dedup
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Persisted MinHash-LSH index: probe-equals-one-shot, incremental
@@ -11,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * dedup a new batch against corpus history WITHOUT rehashing history —
   * the batch's bucket rows broadcast against the band-partitioned
   * bucket table, candidates exact-Jaccard refined. */
-class LshIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
+class LshIndexSpec extends AnyFunSuite with TempDirs {
 
   private var spark: SparkSession = _
 
@@ -24,7 +23,8 @@ class LshIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("ERROR")
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try if (spark != null) spark.stop() finally super.afterAll()
 
   private def docs = spark.read
     .parquet("/root/testdata/sf0.001/documents.parquet")
@@ -37,7 +37,7 @@ class LshIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("probe against persisted index ≡ one-shot near-dups restricted to batch pairs") {
     val hist = docs.where(col("doc_id") % 3 =!= 2)
     val batch = docs.where(col("doc_id") % 3 === 2)
-    val dir = java.nio.file.Files.createTempDirectory("lsh_").toString
+    val dir = tempDir("lsh_").toString
     Dedup.writeLshIndex(hist, "doc_id", "text", dir, numHashes = 64, bands = 64)
     val probed = pairs(Dedup.nearDupsAgainstLshIndex(spark, dir, batch,
       "doc_id", "text", corpus = docs, threshold = 0.35, minBandHits = 4))
@@ -55,10 +55,10 @@ class LshIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val h1 = docs.where(col("doc_id") % 3 === 0)
     val h2 = docs.where(col("doc_id") % 3 === 1)
     val batch = docs.where(col("doc_id") % 3 === 2)
-    val grown = java.nio.file.Files.createTempDirectory("lsh_a_").toString
+    val grown = tempDir("lsh_a_").toString
     Dedup.writeLshIndex(h1, "doc_id", "text", grown, numHashes = 64, bands = 64)
     Dedup.appendToLshIndex(spark, grown, h2, "doc_id", "text")
-    val oneShot = java.nio.file.Files.createTempDirectory("lsh_b_").toString
+    val oneShot = tempDir("lsh_b_").toString
     Dedup.writeLshIndex(h1.unionByName(h2), "doc_id", "text", oneShot,
       numHashes = 64, bands = 64)
     def probe(dir: String) = pairs(Dedup.nearDupsAgainstLshIndex(spark, dir,
@@ -98,7 +98,7 @@ class LshIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("missing or corrupt sidecar fails loudly, not with a silent law change") {
-    val dir = java.nio.file.Files.createTempDirectory("lsh_c_").toString
+    val dir = tempDir("lsh_c_").toString
     intercept[java.io.IOException] {
       Dedup.appendToLshIndex(spark, dir, docs.limit(5), "doc_id", "text")
     }
@@ -123,7 +123,7 @@ class LshIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val near = Seq((100L, "one two three four five six seven"),
       (101L, "one two three four five six eight"))
     val all = (same ++ near).toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("lsh_d_").toString
+    val dir = tempDir("lsh_d_").toString
     Dedup.writeLshIndex(all.where(col("doc_id") =!= 101L), "doc_id", "text", dir,
       numHashes = 64, bands = 64)
     val batch = all.where(col("doc_id") === 101L)

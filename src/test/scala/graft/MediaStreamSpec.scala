@@ -5,10 +5,9 @@ import graft.streaming.StreamOps
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-class MediaStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
+class MediaStreamSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -16,7 +15,8 @@ class MediaStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit =
+    try spark.stop() finally super.afterAll()
 
   private def pngBytes(n: Int): Array[Byte] = {
     val b = new Array[Byte](n)
@@ -293,7 +293,7 @@ class MediaStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     // (zone-aware) timestamp column via the tz-free micros long,
     // exactly as the batch q32 does
     // the streaming file source wants a directory
-    val dir = java.nio.file.Files.createTempDirectory("events-stream")
+    val dir = tempDir("events-stream")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get("/root/testdata/sf0.001/events.parquet"),
       dir.resolve("events.parquet"))
@@ -362,7 +362,7 @@ class MediaStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("CompactingKeyState: bounded reads over many batches, union content, dedup wiring") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-keystate-").toString
+    val dir = tempDir("graft-keystate-").toString
     val compactEvery = 2
     val state = new graft.streaming.CompactingKeyState(spark, dir, compactEvery)
     assert(state.read().isEmpty)
@@ -419,7 +419,7 @@ class MediaStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("CompactingKeyState.prune applies retention and keeps reads bounded") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft-keystate-ttl-").toString
+    val dir = tempDir("graft-keystate-ttl-").toString
     val state = new graft.streaming.CompactingKeyState(spark, dir, compactEvery = 3)
     // keys carry their event time (micros); duplicates can only arrive
     // within 100us, so everything older than watermark-100 is prunable
@@ -437,7 +437,7 @@ class MediaStreamSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(state.read().get.count() == 0L)
     // pruning an EMPTY store is a no-op (no crash on first batch)
     val fresh = new graft.streaming.CompactingKeyState(spark,
-      java.nio.file.Files.createTempDirectory("graft-keystate-empty-").toString)
+      tempDir("graft-keystate-empty-").toString)
     fresh.prune(col("ts") >= lit(0L))
     assert(fresh.read().isEmpty)
   }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The layered navigable-neighbor-graph ANN (NavGraph): build / search /
@@ -15,7 +14,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * cross-cluster cosine <= ~0.79 while in-cluster cosine >= cos(0.28)
   * ~= 0.96 — every node's exact top-(cSize-1) is exactly its
   * co-members, with a margin float noise cannot cross. */
-class NavGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
+class NavGraphSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -23,10 +22,11 @@ class NavGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit =
+    try spark.stop() finally super.afterAll()
 
   private def scratch(): String =
-    java.nio.file.Files.createTempDirectory("nav").toString + "/idx"
+    tempDir("nav").toString + "/idx"
 
   private def vecOf(i: Long, cSize: Int): Array[Float] = {
     val g = i / cSize; val mm = (i % cSize).toInt
@@ -850,7 +850,7 @@ class NavGraphSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("streaming maintenance rides the cadence: mid-stream self-compactions keep searches green") {
     val n = 128; val cSize = 8
-    val work = java.nio.file.Files.createTempDirectory("navstream").toString
+    val work = tempDir("navstream").toString
     val path = s"$work/idx"
     graft.operators.NavGraph.buildNavGraph(
       corpusDf(n, cSize, keep = _ % 8 <= 3), path, m = 8, maxLevel = 1)

@@ -86,16 +86,17 @@ class PlanAuditSpec extends AnyFunSuite with BeforeAndAfterAll {
     "q77_bloom_decontaminate",
     // retrieval metrics: the brute-force ranking stage is q24's
     // hinted-broadcast query set x corpus (the metrics themselves are
-    // hash joins over top-k rows); the analytic qrels fixture is a
-    // broadcast query-id set x corpus cross join by construction
+    // one per-query aggregate over top-k rows); the analytic qrels
+    // fixture is a broadcast query-id set x corpus cross join by
+    // construction
     "q240_retrieval_metrics",
     // MaxSim brute baseline: broadcast bag-query set x candidate bags
     // is the DOCUMENTED contract shape (production = maxSimRerank over
     // first-stage candidates, a hash join)
     "q242_maxsim_topk",
     // BM25: the 1-row corpus scalars (N, avgdl) CROSS JOINed onto the
-    // broadcast query-idf table and the matched postings — in-memory
-    // and persisted-index variants share the shape
+    // matched postings — in-memory and persisted-index variants share
+    // the shape
     "q146_bm25", "q174_bm25_index", "q175_bm25_append",
     // same 1-row corpus-scalar shape after append + compaction
     "q204_bm25_compact",

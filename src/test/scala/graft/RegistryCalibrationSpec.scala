@@ -1,12 +1,11 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Persisted dedup-cluster registry (Dedup.writeRegistry family) and the
   * classifier calibration profile (TextAnalysis.calibrationProfile). */
-class RegistryCalibrationSpec extends AnyFunSuite with BeforeAndAfterAll {
+class RegistryCalibrationSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -14,10 +13,11 @@ class RegistryCalibrationSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit =
+    try spark.stop() finally super.afterAll()
 
   private def scratch(): String =
-    java.nio.file.Files.createTempDirectory("reg").toString + "/idx"
+    tempDir("reg").toString + "/idx"
 
   test("registry: appends + retry + compact cluster like one-shot CC") {
     val sp = spark

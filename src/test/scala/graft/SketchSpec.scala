@@ -3,13 +3,12 @@ package graft
 import graft.operators.Sketch
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** HLL sketch overlap: determinism, parquet persistence + later merge
   * (the "sketch once, union across days" contract), estimate accuracy
   * against exact overlap, and the small-set exactness regime. */
-class SketchSpec extends AnyFunSuite with BeforeAndAfterAll {
+class SketchSpec extends AnyFunSuite with TempDirs {
 
   private var spark: SparkSession = _
 
@@ -22,7 +21,8 @@ class SketchSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("ERROR")
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try if (spark != null) spark.stop() finally super.afterAll()
 
   private def fixture = {
     val sp = spark
@@ -72,7 +72,7 @@ class SketchSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // persist per-"day" sketches, read back, merge with hll_union_agg:
     // the merged estimate tracks the one-shot estimate within the band
-    val dir = java.nio.file.Files.createTempDirectory("sk_").toString
+    val dir = tempDir("sk_").toString
     val day1 = fixture.where(substring(col("v"), 2, 10).cast("int") % 2 === 0)
     val day2 = fixture.where(substring(col("v"), 2, 10).cast("int") % 2 === 1)
     Sketch.groupSketches(day1, "g", "v").write.parquet(s"$dir/d1")

@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The round-12 map-only curation operators are usable UNCHANGED inside
@@ -16,7 +15,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * are deliberately absent: they aggregate over the corpus and belong
   * in foreachBatch with a pre-built model, like q123/q133 demonstrate
   * for dedup. */
-class StreamCompatSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamCompatSpec extends AnyFunSuite with TempDirs {
 
   private var spark: SparkSession = _
 
@@ -30,7 +29,8 @@ class StreamCompatSpec extends AnyFunSuite with BeforeAndAfterAll {
     graft.functions.GeoFunctions.register(spark)
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try if (spark != null) spark.stop() finally super.afterAll()
 
   private val docs = Seq(
     (0L, "alpha beta gamma delta epsilon zeta eta theta."),
@@ -140,7 +140,7 @@ class StreamCompatSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("cms maintenance: incremental == one-shot; batch retry is idempotent") {
     val s = spark
     import s.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("cms-state-").toString
+    val dir = tempDir("cms-state-").toString
     val state = new graft.streaming.CompactingKeyState(spark, dir, compactEvery = 1)
     val b0 = (0 until 300).map(i => (i % 17).toLong).toDF("k")
     val b1 = (0 until 200).map(i => (i % 23).toLong).toDF("k")

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Misra–Gries maintenance across micro-batches (StreamOps.mgAppendBatch
@@ -12,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * exactly-once under foreachBatch retries (same batchId re-append is a
   * no-op). With capacity >= distinct items the summary is exact (the
   * q208 oracle regime). */
-class StreamMgSpec extends AnyFunSuite with BeforeAndAfterAll {
+class StreamMgSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -20,10 +19,11 @@ class StreamMgSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit =
+    try spark.stop() finally super.afterAll()
 
   private def scratch(): String =
-    java.nio.file.Files.createTempDirectory("mgstate").toString + "/state"
+    tempDir("mgstate").toString + "/state"
 
   // skewed stream: item i appears ~ (40 - i)^2 times, shuffled
   // deterministically across 3 batches

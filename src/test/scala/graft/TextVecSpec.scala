@@ -3,10 +3,9 @@ package graft
 import graft.functions.TextKernels
 import graft.operators.{Ann, Dedup}
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-class TextVecSpec extends AnyFunSuite with BeforeAndAfterAll {
+class TextVecSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -14,7 +13,8 @@ class TextVecSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit =
+    try spark.stop() finally super.afterAll()
 
   // ---- kernel-level ----------------------------------------------------
 
@@ -195,7 +195,7 @@ class TextVecSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("IVF index persists partitioned by list and search prunes to probed lists") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ivf").toString
+    val dir = tempDir("graft_ivf").toString
     val emb = spark.read.parquet("/root/testdata/sf0.001/embeddings.parquet")
     val queries = emb.where(org.apache.spark.sql.functions.col("vec_id") < 5)
     val built = Ann.buildIvf(emb, nlist = 8)
@@ -262,8 +262,8 @@ class TextVecSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the float lists (codes are 1/4 the vector payload; parquet framing
     // keeps the ratio under the raw 4x, so assert a lenient 1.5x)
     val fidx = Ann.buildIvf(emb, nlist = 8)
-    val fd = java.nio.file.Files.createTempDirectory("graft_ivf_f").toString
-    val qd = java.nio.file.Files.createTempDirectory("graft_ivf_q").toString
+    val fd = tempDir("graft_ivf_f").toString
+    val qd = tempDir("graft_ivf_q").toString
     Ann.writeIvfIndex(fidx, fd)
     Ann.writeIvfIndex(qidx, qd)
     def parquetBytes(root: String): Long = {
@@ -910,7 +910,7 @@ class TextVecSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
     // build-once-query-many: model written to parquet (the 100 TB shape),
     // read back, scored with ONE corpus scan
-    val dir = java.nio.file.Files.createTempDirectory("bigram_model").toString
+    val dir = tempDir("bigram_model").toString
     graft.operators.TextAnalysis.bigramModel(docs, "doc_id", "text")
       .write.mode("overwrite").parquet(dir)
     val viaModel = graft.operators.TextAnalysis

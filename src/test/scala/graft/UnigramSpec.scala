@@ -1,12 +1,11 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Unigram-LM trainer (operators.Unigram): the EM/Viterbi law, pruning,
   * and the tokenizeIds output-contract parity with the BPE path. */
-class UnigramSpec extends AnyFunSuite with BeforeAndAfterAll {
+class UnigramSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -14,7 +13,8 @@ class UnigramSpec extends AnyFunSuite with BeforeAndAfterAll {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  override def afterAll(): Unit = spark.stop()
+  override def afterAll(): Unit =
+    try spark.stop() finally super.afterAll()
 
   import graft.operators.Unigram
 
@@ -148,7 +148,7 @@ class UnigramSpec extends AnyFunSuite with BeforeAndAfterAll {
     val train = Seq((1L, "spark shuffle spark sort"), (2L, "spark codegen"))
       .toDF("doc_id", "text")
     val m = Unigram.learn(train, "text", iters = 2, maxPieceLen = 3)
-    val dir = java.nio.file.Files.createTempDirectory("graft-unigram-").toString
+    val dir = tempDir("graft-unigram-").toString
     Unigram.saveModel(sp, m, dir)
     val loaded = Unigram.loadModel(sp, dir)
     assert(loaded.maxPieceLen == m.maxPieceLen)
@@ -160,7 +160,7 @@ class UnigramSpec extends AnyFunSuite with BeforeAndAfterAll {
       .map(r => (r.getLong(0), r.getInt(1), r.getString(2), r.get(3))).toSet
     assert(a == b)
     // duplicate piece -> loud
-    val dupDir = java.nio.file.Files.createTempDirectory("graft-unigram-dup-").toString
+    val dupDir = tempDir("graft-unigram-dup-").toString
     Seq(("a", 1L, -1.0), ("a", 2L, -2.0)).toDF("piece", "cnt", "logprob")
       .write.parquet(s"$dupDir/pieces")
     graft.util.FsIO.writeStringAtomic(sp,
@@ -168,7 +168,7 @@ class UnigramSpec extends AnyFunSuite with BeforeAndAfterAll {
       """{"maxPieceLen":3}""")
     assertThrows[IllegalArgumentException](Unigram.loadModel(sp, dupDir))
     // broken closure ('ab' without 'b') -> loud
-    val gapDir = java.nio.file.Files.createTempDirectory("graft-unigram-gap-").toString
+    val gapDir = tempDir("graft-unigram-gap-").toString
     Seq(("a", 1L, -1.0), ("ab", 2L, -2.0)).toDF("piece", "cnt", "logprob")
       .write.parquet(s"$gapDir/pieces")
     graft.util.FsIO.writeStringAtomic(sp,
@@ -176,7 +176,7 @@ class UnigramSpec extends AnyFunSuite with BeforeAndAfterAll {
       """{"maxPieceLen":3}""")
     assertThrows[IllegalArgumentException](Unigram.loadModel(sp, gapDir))
     // missing sidecar -> loud
-    val noSide = java.nio.file.Files.createTempDirectory("graft-unigram-ns-").toString
+    val noSide = tempDir("graft-unigram-ns-").toString
     Seq(("a", 1L, -1.0)).toDF("piece", "cnt", "logprob")
       .write.parquet(s"$noSide/pieces")
     assertThrows[java.io.IOException](Unigram.loadModel(sp, noSide))

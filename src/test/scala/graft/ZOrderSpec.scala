@@ -3,14 +3,13 @@ package graft
 import graft.operators.ZOrder
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Z-order clustering: the interleave law on known values, partition-
   * box locality of clusterByZ, and the behavioral payoff — parquet
   * row-group skipping on BOTH dimensions, where a linear sort only
   * ever skips on its leading column. */
-class ZOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
+class ZOrderSpec extends AnyFunSuite with TempDirs {
 
   private var spark: SparkSession = _
 
@@ -23,7 +22,8 @@ class ZOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("ERROR")
   }
 
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit =
+    try if (spark != null) spark.stop() finally super.afterAll()
 
   test("zvalue interleaves bits into disjoint slots") {
     val sp = spark
@@ -61,7 +61,7 @@ class ZOrderSpec extends AnyFunSuite with BeforeAndAfterAll {
       "CAST(id % 256 AS BIGINT) AS x", "CAST(id DIV 256 AS BIGINT) AS y",
       "CAST(id AS BIGINT) AS payload")
     def write(df: org.apache.spark.sql.DataFrame): String = {
-      val dir = java.nio.file.Files.createTempDirectory("zo_").toString + "/t"
+      val dir = tempDir("zo_").toString + "/t"
       df.coalesce(1).write.option("parquet.block.size", 16 * 1024).parquet(dir)
       dir
     }
