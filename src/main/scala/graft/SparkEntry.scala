@@ -572,7 +572,7 @@ object SparkEntry {
     // incremental dedup against a PERSISTED LSH index (the daily-crawl
     // contract): hash 80% of the corpus once into a band-partitioned
     // bucket table, then find every near-dup pair TOUCHING the
-    // remaining 20% by broadcasting the batch's bucket rows against the
+    // remaining 20% by broadcasting the batch's bucket keys against the
     // index — no history rehash, no index shuffle — and exact-shingle
     // refining the candidates. Same signature law and thresholds as
     // q28, so the oracle is q28's exact-Jaccard replay restricted to
@@ -1400,8 +1400,7 @@ object SparkEntry {
     "q43_geotable_prune" -> ((spark, dir) => {
       prep(spark, dir)
       import org.apache.spark.sql.functions._
-      val out = new java.io.File(System.getProperty("java.io.tmpdir"),
-        "graft_geotable_" + dir.replaceAll("[^A-Za-z0-9]", "_")).getAbsolutePath
+      val out = scratchDir("graft_geotable_")
       val src = spark.sql(s"SELECT l_orderkey, l_linenumber, $PT AS geom FROM lineitem")
       graft.sources.GeoTable.writePartitionedByLocation(src, out, "geom",
         cellSize = 10.0, numFiles = 8)
@@ -3714,7 +3713,7 @@ object SparkEntry {
     }),
     // the ADAPTIVE probe's shuffle shape: q221's exact fixture probed
     // with broadcastMaxRows = 0, forcing the backfill-sized-batch path
-    // (no broadcast hints; the joins shuffle on (band, bucket)) — the
+    // (no broadcast hint; the bucket-key semi-join shuffles) — the
     // brute-force popcount oracle must hold through either join shape
     "q234_hamming_index_shuffle" -> ((spark, dir) => {
       prep(spark, dir)

@@ -335,7 +335,7 @@ object Ann {
     val ver = graft.util.FsIO.nextVersionDir(spark, path)
     idx.assigned
       .repartition(idx.centroids.length, col("list"))
-      .sortWithinPartitions("nid")
+      .sortWithinPartitions("list", "nid")
       .write.partitionBy("list").parquet(ver.toString)
     for (name <- Seq("_ivf_centroids.json", "_pq_codebook.json"))
       graft.util.FsIO.readString(spark,

@@ -460,7 +460,7 @@ object Dedup {
     readExactIndex(spark, dataDir)
       .groupBy("h").agg(min("doc").as("doc"))
       .withColumn("pt", pmod(hash(col("h")), lit(buckets)))
-      .repartition(buckets, col("pt")).sortWithinPartitions("h")
+      .repartition(buckets, col("pt")).sortWithinPartitions("pt", "h")
       .write.partitionBy("pt").parquet(s"$ver/hashes")
     for (name <- Seq("_exact_params.json", "_schema_hashes.ddl"))
       graft.util.FsIO.readString(spark,
@@ -493,37 +493,28 @@ object Dedup {
   /** Compact a persisted LSH index in place: each [[appendToLshIndex]]
     * adds part-files to the `band=` directories, growing every later
     * probe's scan fan-out. Bucket rows are facts (no deltas), so
-    * compaction just rewrites each band as ONE file, sorted by
-    * (bucket, doc) so a probed bucket's rows sit in one row-group
-    * neighborhood, and re-pins the params sidecar. Probe results are
-    * identical before and after (q206 pins it through the q170 gate;
-    * the spec pins 1 file/band). The rewrite lands in the NEXT version
-    * directory and activates by pointer flip
-    * ([[graft.util.FsIO.publishVersion]]), so concurrent probes —
-    * including ones planned mid-compaction — keep reading the version
-    * they resolved; not concurrent-WRITER safe. */
+    * compaction just rewrites each band as ONE file
+    * ([[compactBandedIndex]]). Probe results are identical before and
+    * after (q206 pins it through the q170 gate; the spec pins 1
+    * file/band). The rewrite lands in the NEXT version directory and
+    * activates by pointer flip ([[graft.util.FsIO.publishVersion]]), so
+    * concurrent probes — including ones planned mid-compaction — keep
+    * reading the version they resolved; not concurrent-WRITER safe. */
   def compactLshIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, keepVersions: Int = 1): Unit = {
     val dataDir = graft.util.FsIO.indexDataDir(spark, path)
-    val (numHashes, bands) = lshParams(spark, dataDir)
-    val ver = graft.util.FsIO.nextVersionDir(spark, path)
-    spark.read.parquet(s"$dataDir/buckets")
-      .repartition(bands, col("band")).sortWithinPartitions("bucket", "doc")
-      .write.partitionBy("band").parquet(s"$ver/buckets")
-    graft.util.FsIO.writeStringAtomic(spark,
-      new org.apache.hadoop.fs.Path(ver, "_lsh_params.json"),
-      s"""{"numHashes":$numHashes,"bands":$bands}""")
-    graft.util.FsIO.publishVersion(spark, path, ver, keepVersions)
+    compactBandedIndex(spark, path, dataDir, lshParams(spark, dataDir)._2,
+      "_lsh_params.json", keepVersions)
   }
 
-  /** Candidate near-dup pairs TOUCHING a new batch: the batch's bucket
-    * rows (hashed under the index's recorded law) are broadcast against
-    * the persisted bucket table, so the historical side is a map-only
-    * scan — no index shuffle, no history rehash. Pair semantics equal
+  /** Candidate near-dup pairs TOUCHING a new batch, against the
+    * persisted bucket table: [[bandedIndexProbe]] over the batch's
+    * bucket rows (hashed under the index's recorded law), prefiltered
+    * on `xxhash64(band, bucket)`. Pair semantics equal
     * [[minhashCandidates]] over (history ∪ batch) restricted to pairs
-    * with at least one batch doc: bucket caps count the COMBINED bucket
-    * (a small extra (band, bucket)-keyed count shuffle), band hits are
-    * distinct bands, pairs come back id-ordered (`ida < idb`). */
+    * with at least one batch doc: bucket caps count the COMBINED
+    * bucket, band hits are distinct bands, pairs come back id-ordered
+    * (`ida < idb`). */
   def lshIndexCandidates(spark: org.apache.spark.sql.SparkSession,
       path: String, newDf: DataFrame, idCol: String, textCol: String,
       maxBucket: Int = 10000, minBandHits: Int = 1,
@@ -532,35 +523,11 @@ object Dedup {
     // same snapshot even if a compaction publishes mid-probe
     val dataDir = graft.util.FsIO.indexDataDir(spark, path)
     val (numHashes, bands) = lshParams(spark, dataDir)
-    // hash the batch ONCE and reuse (localCheckpoint: three consumers
-    // below would otherwise recompute the signatures per subtree)
-    val nb = minhashBuckets(newDf, idCol, textCol, numHashes, bands)
-      .select("doc", "band", "bucket").localCheckpoint()
-    // ADAPTIVE probe shape, the [[hammingIndexPairs]] rule: daily-sized
-    // batches broadcast (map-only pruned history scan); a batch past
-    // `broadcastMaxRows` banded rows drops the hints and the joins
-    // shuffle on (band, bucket) instead of OOMing executors
-    val small = nb.count() <= broadcastMaxRows
-    def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    // only buckets containing >= 1 batch doc can produce a candidate,
-    // so the historical scan filters down to those BEFORE any
-    // aggregation — the bucket-size cap then counts the combined
-    // occupancy of exactly the touched buckets, not the whole table
-    val hot = spark.read.parquet(s"$dataDir/buckets")
-      .select("doc", "band", "bucket")
-      .join(bc(nb.select("band", "bucket").distinct()),
-        Seq("band", "bucket"))
-      .unionByName(nb)
-    val fit = hot.join(
-      hot.groupBy("band", "bucket").agg(count(lit(1)).as("__bsz"))
-        .where(col("__bsz") <= maxBucket),
-      Seq("band", "bucket"))
-    bc(nb.withColumnRenamed("doc", "__nd")).join(fit, Seq("band", "bucket"))
-      .where(col("__nd") =!= col("doc"))
-      .select(col("band"),
-        least(col("__nd"), col("doc")).as("ida"),
-        greatest(col("__nd"), col("doc")).as("idb"))
-      .groupBy("ida", "idb").agg(countDistinct(col("band")).as("__hits"))
+    bandedIndexProbe(spark, dataDir,
+        minhashBuckets(newDf, idCol, textCol, numHashes, bands),
+        xxhash64(col("band"), col("bucket")), maxBucket, broadcastMaxRows)
+      .groupBy(col("pa.doc").as("ida"), col("pb.doc").as("idb"))
+      .agg(countDistinct(col("band")).as("__hits"))
       .where(col("__hits") >= minBandHits)
       .select("ida", "idb")
   }
@@ -781,23 +748,66 @@ object Dedup {
       df.select(col(idCol), simhash64(col(textCol)).as("__sh64")),
       idCol, "__sh64")
 
+  /** The probe skeleton under [[hammingIndexPairs]] and
+    * [[lshIndexCandidates]]: member pairs `(band, pa, pb)` — structs of
+    * `nb`'s non-bucket columns, `pa.doc < pb.doc`, at least one a batch
+    * row — of every bucket of history ∪ batch `nb` holding a batch row.
+    * Rows with a NULL doc or bucket never pair.
+    *  - Prefilter: history rows survive a left-semi join on ONE long
+    *    `key` over (band, bucket), whose broadcast builds a
+    *    `LongHashedRelation` sized to its rows; a composite key's
+    *    `UnsafeHashedRelation` pins a whole Tungsten page (16 MB at a
+    *    3 GB heap and 4 slots) however few rows it holds. A colliding
+    *    key only lets extra rows in: groups form on the true
+    *    (band, bucket), and one without a batch row yields no pair.
+    *  - Cap: a window counts each bucket's combined rows, and buckets
+    *    over `maxBucket` drop BEFORE members are gathered, so the cap
+    *    bounds memory: a degenerate bucket is never collected whole.
+    *  - Pairs: each surviving bucket gathers its members once and pairs
+    *    each batch member with every other one — no self-join.
+    *  - ADAPTIVE shape: past `broadcastMaxRows` banded batch rows the
+    *    hint drops and the semi-join shuffles instead of OOMing
+    *    executors on a forced build side; same rows either way. */
+  private def bandedIndexProbe(spark: org.apache.spark.sql.SparkSession,
+      dataDir: String, nb: DataFrame, key: Column, maxBucket: Int,
+      broadcastMaxRows: Long): DataFrame = {
+    // banded ONCE: the count, the key side and the union all read it
+    val batch = nb.where(col("bucket").isNotNull).localCheckpoint()
+    val keys = batch.select(key.as("__k"))
+    val hist = spark.read.parquet(s"$dataDir/buckets")
+      .select(nb.columns.map(col): _*)
+      .join(if (batch.count() <= broadcastMaxRows) broadcast(keys) else keys,
+        key === col("__k"), "left_semi")
+    val bucket = Window.partitionBy("band", "bucket")
+    val member = struct((Seq("__b") ++ nb.columns.filterNot(Set("band", "bucket")))
+      .map(col): _*)
+    hist.withColumn("__b", lit(false))
+      .unionByName(batch.withColumn("__b", lit(true)))
+      .withColumn("__n", count(lit(1)).over(bucket))
+      .where(col("__n") <= maxBucket)
+      .groupBy("band", "bucket").agg(collect_list(member).as("__ms"))
+      .select(col("band"), explode(flatten(transform(
+        filter(col("__ms"), _.getField("__b")),
+        x => transform(
+          filter(col("__ms"), y => y.getField("doc") =!= x.getField("doc")),
+          y => when(x.getField("doc") < y.getField("doc"),
+              struct(x.as("pa"), y.as("pb")))
+            .otherwise(struct(y.as("pa"), x.as("pb"))))))).as("__p"))
+      .select(col("band"), col("__p.pa").as("pa"), col("__p.pb").as("pb"))
+  }
+
   /** Hamming-radius pairs TOUCHING a new batch, against the persisted
-    * index: the batch's banded fingerprints filter the historical
-    * bucket table to touched buckets — broadcast (map-only scan, no
-    * index shuffle) while the batch fits `broadcastMaxRows`, shuffle
-    * joins on (band, bucket) beyond it (a backfill-sized batch degrades
-    * instead of OOMing) — the batch rows union in so batch-batch pairs
-    * count, combined bucket occupancy is capped at `maxBucket`
-    * ([[simhashNearDups]]'s degeneracy cap), and candidates refine by
-    * the exact codegen'd popcount carried on the rows themselves —
-    * no corpus join anywhere. Equals [[hammingPairs64]] over
-    * (history ∪ batch) restricted to pairs with at least one batch
-    * doc; completeness needs `maxHamming < bands` (pigeonhole), the
-    * same `require` as the in-memory form. Rows with a NULL
-    * fingerprint produce NULL buckets that the equi-joins drop — they
-    * can never pair; fingerprint upstream with a non-null law (the
-    * simhash wrappers coalesce text to '') if that matters. Output
-    * `(ida, idb, hamming)`, id-ordered. */
+    * index: [[bandedIndexProbe]] over the batch's banded fingerprints,
+    * prefiltered on the exact key `band << (64 / bands) | bucket` (the
+    * bucket alone when `bands = 1`), candidates refined by the exact
+    * codegen'd popcount carried on the rows themselves — no corpus
+    * join anywhere. Equals [[hammingPairs64]] over (history ∪ batch)
+    * restricted to pairs with at least one batch doc; completeness
+    * needs `maxHamming < bands` (pigeonhole), the same `require` as
+    * the in-memory form. Rows with a NULL fingerprint have NULL
+    * buckets and never pair; fingerprint upstream with a non-null law
+    * (the simhash wrappers coalesce text to '') if that matters.
+    * Output `(ida, idb, hamming)`, id-ordered. */
   def hammingIndexPairs(spark: org.apache.spark.sql.SparkSession,
       path: String, newDf: DataFrame, idCol: String, hashCol: String,
       maxHamming: Int = 3, maxBucket: Int = 10000,
@@ -808,39 +818,13 @@ object Dedup {
     val bands = hammingParams(spark, dataDir)
     require(maxHamming < bands,
       s"banding is complete only for maxHamming < bands (got $maxHamming >= $bands); rebuild with more bands")
-    val nb = hashBands64(newDf, idCol, col(hashCol).cast("long"), bands)
-      .select("doc", "sh", "band", "bucket").localCheckpoint()
-    // ADAPTIVE probe shape: a daily-sized batch broadcasts its banded
-    // rows (history stays a map-only pruned scan); a backfill-sized
-    // batch (> broadcastMaxRows banded rows, counted in one cheap pass
-    // over the just-checkpointed partitions) drops the hints and
-    // degrades to shuffle joins on (band, bucket) instead of OOMing
-    // executors on a forced build side. Same rows either way — the
-    // q234 contract runs the q221 oracle through the shuffle shape.
-    val small = nb.count() <= broadcastMaxRows
-    def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val hot = spark.read.parquet(s"$dataDir/buckets")
-      .select("doc", "sh", "band", "bucket")
-      .join(bc(nb.select("band", "bucket").distinct()),
-        Seq("band", "bucket"))
-      .unionByName(nb)
-    val fit = hot.join(
-      hot.groupBy("band", "bucket").agg(count(lit(1)).as("__bsz"))
-        .where(col("__bsz") <= maxBucket),
-      Seq("band", "bucket"))
-    bc(nb.select(col("band"), col("bucket"),
-        col("doc").as("__nd"), col("sh").as("__nsh")))
-      .join(fit, Seq("band", "bucket"))
-      .where(col("__nd") =!= col("doc"))
-      .select(
-        when(col("__nd") < col("doc"),
-            struct(col("__nd").as("d"), col("__nsh").as("s")))
-          .otherwise(struct(col("doc").as("d"), col("sh").as("s"))).as("pa"),
-        when(col("__nd") < col("doc"),
-            struct(col("doc").as("d"), col("sh").as("s")))
-          .otherwise(struct(col("__nd").as("d"), col("__nsh").as("s"))).as("pb"))
-      .select(col("pa.d").as("ida"), col("pb.d").as("idb"),
-        hamming64(col("pa.s"), col("pb.s")).as("hamming"))
+    bandedIndexProbe(spark, dataDir,
+        hashBands64(newDf, idCol, col(hashCol).cast("long"), bands),
+        if (bands == 1) col("bucket")
+        else shiftleft(col("band").cast("long"), 64 / bands).bitwiseOR(col("bucket")),
+        maxBucket, broadcastMaxRows)
+      .select(col("pa.doc").as("ida"), col("pb.doc").as("idb"),
+        hamming64(col("pa.sh"), col("pb.sh")).as("hamming"))
       .distinct()
       .where(col("hamming") <= maxHamming)
   }
@@ -856,21 +840,32 @@ object Dedup {
       idCol, "__sh64", maxHamming, maxBucket, broadcastMaxRows)
 
   /** Compact a persisted hamming index: bucket rows are facts (no
-    * deltas), so compaction rewrites each band as ONE file sorted by
-    * (bucket, doc) and re-pins the params sidecar — probe-identical
-    * before and after, same next-version + pointer-flip discipline as
-    * the other compactors. */
+    * deltas), so compaction rewrites each band as ONE file
+    * ([[compactBandedIndex]]) — probe-identical before and after, same
+    * next-version + pointer-flip discipline as the other compactors. */
   def compactHammingIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, keepVersions: Int = 1): Unit = {
     val dataDir = graft.util.FsIO.indexDataDir(spark, path)
-    val bands = hammingParams(spark, dataDir)
+    compactBandedIndex(spark, path, dataDir, hammingParams(spark, dataDir),
+      "_hamming_params.json", keepVersions)
+  }
+
+  /** The banded compactors' rewrite: one file per `band=` directory,
+    * rows sorted by (bucket, doc) so a probed bucket sits in one
+    * row-group neighborhood, and the validated params sidecar carried
+    * over. The sort leads with `band`: a partitioned write sorts by its
+    * partition columns unless its input is already so ordered, and a
+    * sort on `band` alone would replace the in-file order. */
+  private def compactBandedIndex(spark: org.apache.spark.sql.SparkSession,
+      path: String, dataDir: String, bands: Int, sidecar: String,
+      keepVersions: Int): Unit = {
     val ver = graft.util.FsIO.nextVersionDir(spark, path)
     spark.read.parquet(s"$dataDir/buckets")
-      .repartition(bands, col("band")).sortWithinPartitions("bucket", "doc")
+      .repartition(bands, col("band")).sortWithinPartitions("band", "bucket", "doc")
       .write.partitionBy("band").parquet(s"$ver/buckets")
-    graft.util.FsIO.writeStringAtomic(spark,
-      new org.apache.hadoop.fs.Path(ver, "_hamming_params.json"),
-      s"""{"bands":$bands}""")
+    graft.util.FsIO.readString(spark, new org.apache.hadoop.fs.Path(dataDir, sidecar))
+      .foreach(s => graft.util.FsIO.writeStringAtomic(spark,
+        new org.apache.hadoop.fs.Path(ver, sidecar), s))
     graft.util.FsIO.publishVersion(spark, path, ver, keepVersions)
   }
 
@@ -972,7 +967,7 @@ object Dedup {
     readRegistryEdges(spark, dataDir)
       .select("a", "b").distinct()
       .withColumn("pt", pmod(hash(col("a")), lit(buckets)))
-      .repartition(buckets, col("pt")).sortWithinPartitions("a", "b")
+      .repartition(buckets, col("pt")).sortWithinPartitions("pt", "a", "b")
       .write.partitionBy("pt").parquet(s"$ver/edges")
     for (name <- Seq("_registry_params.json", "_schema_edges.ddl"))
       graft.util.FsIO.readString(spark,

@@ -1073,13 +1073,15 @@ object TextAnalysis {
     val ver = graft.util.FsIO.nextVersionDir(spark, path)
     // one task per pt bucket -> one file per partition directory; the
     // in-file (tok, doc) sort clusters each token's postings contiguously
+    // and leads with pt, or the partitioned write's own sort by pt
+    // would replace it
     readTable("postings")
-      .repartition(buckets, col("pt")).sortWithinPartitions("tok", "doc")
+      .repartition(buckets, col("pt")).sortWithinPartitions("pt", "tok", "doc")
       .write.partitionBy("pt").parquet(s"$ver/postings")
     readTable("dfreq")
       .groupBy("tok").agg(sum("df").as("df"))
       .withColumn("pt", pmod(hash(col("tok")), lit(buckets)))
-      .repartition(buckets, col("pt")).sortWithinPartitions("tok")
+      .repartition(buckets, col("pt")).sortWithinPartitions("pt", "tok")
       .write.partitionBy("pt").parquet(s"$ver/dfreq")
     readTable("stats")
       .agg(sum("n").as("n"), sum("mass").as("mass"))

@@ -174,4 +174,34 @@ class HammingIndexSpec extends AnyFunSuite with TempDirs {
         "doc_id", "text", maxHamming = 4)
     }
   }
+
+  test("oversized combined buckets are dropped before their members are gathered") {
+    val sp = spark
+    import sp.implicits._
+    // 30 history docs share one fingerprint and batch doc 30 joins them:
+    // every band's combined bucket holds 31 rows, over the cap of 10; the
+    // near pair (hamming 1, buckets of 2) survives
+    val same = (0L to 30L).map(i => (i, 0x0123456789abcdefL))
+    val near = Seq((100L, 0x7edcba9876543210L), (101L, 0x7edcba9876543211L))
+    val all = (same ++ near).toDF("doc_id", "sh")
+    val path = scratch()
+    graft.operators.Dedup.writeHammingIndex(
+      all.where(col("doc_id") < 30L || col("doc_id") === 100L), "doc_id", "sh", path)
+    val batch = all.where(col("doc_id") === 30L || col("doc_id") === 101L)
+    def probe(maxBucket: Int) = graft.operators.Dedup.hammingIndexPairs(
+      spark, path, batch, "doc_id", "sh", maxBucket = maxBucket)
+    assert(pairSet(probe(10)) == Set((100L, 101L, 1)))
+    assert(pairSet(probe(31)).size == 31, "uncapped, doc 30 pairs with all 30 (vacuous)")
+    // the window's count filter sits below the only member gather
+    import org.apache.spark.sql.catalyst.expressions.aggregate.CollectList
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, Window}
+    val gathers = probe(10).queryExecution.optimizedPlan.collect {
+      case a: Aggregate
+          if a.aggregateExpressions.exists(_.find(_.isInstanceOf[CollectList]).isDefined) => a
+    }
+    assert(gathers.size == 1 && gathers.head.child.find {
+      case f: Filter => f.child.isInstanceOf[Window]
+      case _ => false
+    }.isDefined, s"no capped window below the gather: $gathers")
+  }
 }

@@ -8,7 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * laws are (1) compaction never changes a search result — searches
   * before and after must be row-identical — and (2) it actually merges
   * the append shards: every partition directory (pt= / band= / list=)
-  * ends with exactly ONE data file, where appends had left several. */
+  * ends with exactly ONE data file, where appends had left several,
+  * sorted as its compactor documents. */
 class IndexCompactionSpec extends AnyFunSuite with TempDirs {
 
   private lazy val spark: SparkSession = SparkSession.builder()
@@ -37,6 +38,21 @@ class IndexCompactionSpec extends AnyFunSuite with TempDirs {
         d.listFiles().count(f => f.isFile && f.getName.endsWith(".parquet")))
       .toMap
   }
+
+  /** every data file in `dir`'s partition directories, read alone and
+    * in file order, is sorted by `cols` */
+  private def assertFileOrder(dir: String, cols: String*): Unit =
+    for (d <- new java.io.File(dir).listFiles() if d.isDirectory && d.getName.contains("=");
+         f <- d.listFiles() if f.isFile && f.getName.endsWith(".parquet")) {
+      val rows = spark.read.parquet(f.getPath).select(cols.map(col): _*).collect()
+        .map(_.toSeq.map(_.asInstanceOf[Comparable[Any]]))
+      val ordered = rows.sliding(2).forall {
+        case Array(a, b) =>
+          a.zip(b).map { case (x, y) => x.compareTo(y) }.find(_ != 0).forall(_ < 0)
+        case _ => true
+      }
+      assert(ordered, s"$f is not sorted by ${cols.mkString(", ")}")
+    }
 
   private def docsDf = {
     val sp = spark
@@ -76,6 +92,8 @@ class IndexCompactionSpec extends AnyFunSuite with TempDirs {
     val dfreqAfter = filesPerPartDir(s"${dataDir(path)}/dfreq")
     assert(dfreqAfter.nonEmpty && dfreqAfter.values.forall(_ == 1),
       s"dfreq not fully compacted: $dfreqAfter")
+    assertFileOrder(s"${dataDir(path)}/postings", "tok", "doc")
+    assertFileOrder(s"${dataDir(path)}/dfreq", "tok")
     // deltas folded: at most one dfreq row per token
     val dup = spark.read.parquet(s"${dataDir(path)}/dfreq")
       .groupBy("tok").count().where(col("count") > 1).count()
@@ -144,6 +162,7 @@ class IndexCompactionSpec extends AnyFunSuite with TempDirs {
     assert(probe() == before, "compaction changed an LSH probe result")
     val after = filesPerPartDir(s"${dataDir(path)}/buckets")
     assert(after.nonEmpty && after.values.forall(_ == 1), s"bands not merged: $after")
+    assertFileOrder(s"${dataDir(path)}/buckets", "bucket", "doc")
   }
 
   test("exact-hash index: probe ≡ one-shot election, compact folds to 1 row/hash") {
@@ -168,6 +187,7 @@ class IndexCompactionSpec extends AnyFunSuite with TempDirs {
     assert(probe() == want, "compaction changed a probe result")
     val after = filesPerPartDir(s"${dataDir(path)}/hashes")
     assert(after.nonEmpty && after.values.forall(_ == 1), s"not merged: $after")
+    assertFileOrder(s"${dataDir(path)}/hashes", "h")
     // deltas folded: one row per hash
     val dup = spark.read.parquet(s"${dataDir(path)}/hashes")
       .groupBy("h").count().where(col("count") > 1).count()
@@ -206,6 +226,7 @@ class IndexCompactionSpec extends AnyFunSuite with TempDirs {
       "compaction changed an IVF search result")
     val after = filesPerPartDir(dataDir(path))
     assert(after.nonEmpty && after.values.forall(_ == 1), s"lists not merged: $after")
+    assertFileOrder(dataDir(path), "nid")
   }
 
   test("IVF-PQ: same compactor handles the codes layout, codebook survives") {
@@ -229,5 +250,25 @@ class IndexCompactionSpec extends AnyFunSuite with TempDirs {
     assert(after.nonEmpty && after.values.forall(_ == 1), s"lists not merged: $after")
     // the codebook sidecar must have been carried over
     assert(new java.io.File(dataDir(path), "_pq_codebook.json").exists())
+  }
+
+  test("hamming index and registry compaction keep their in-file order") {
+    val fp = spark.range(0, 4000).select(col("id").as("doc"), xxhash64(col("id")).as("sh"))
+    val ham = scratch("hamorder")
+    graft.operators.Dedup.writeHammingIndex(
+      fp.where(col("doc") % 2 === 0), "doc", "sh", ham, bands = 4)
+    graft.operators.Dedup.appendToHammingIndex(spark, ham,
+      fp.where(col("doc") % 2 === 1), "doc", "sh")
+    graft.operators.Dedup.compactHammingIndex(spark, ham)
+    assertFileOrder(s"${dataDir(ham)}/buckets", "bucket", "doc")
+    val edges = spark.range(0, 2000).select(
+      pmod(xxhash64(col("id")), lit(500L)).as("a"),
+      pmod(xxhash64(col("id"), lit(1)), lit(500L)).as("b"))
+    val reg = scratch("regorder")
+    graft.operators.Dedup.writeRegistry(edges.where(col("a") % 2 === 0), "a", "b", reg)
+    graft.operators.Dedup.appendToRegistry(spark, reg,
+      edges.where(col("a") % 2 === 1), "a", "b")
+    graft.operators.Dedup.compactRegistry(spark, reg)
+    assertFileOrder(s"${dataDir(reg)}/edges", "a", "b")
   }
 }

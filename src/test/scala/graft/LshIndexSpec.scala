@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Persisted MinHash-LSH index: probe-equals-one-shot, incremental
   * append, parameter-sidecar integrity. The 100 TB contract under test:
   * dedup a new batch against corpus history WITHOUT rehashing history —
-  * the batch's bucket rows broadcast against the band-partitioned
+  * the batch's bucket keys broadcast against the band-partitioned
   * bucket table, candidates exact-Jaccard refined. */
 class LshIndexSpec extends AnyFunSuite with TempDirs {
 

@@ -2,21 +2,20 @@ package graft
 
 import java.util.concurrent.atomic.AtomicLong
 
-import graft.operators.{Retrieval, TextAnalysis}
+import graft.operators.{Dedup, Retrieval, TextAnalysis}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Job budgets of the retrieval chain on the sf0.001 fixture: every job
-  * an operator starts is counted, from building its DataFrame to running
-  * it to a no-op sink. Each scheduled job costs driver round trips
-  * whatever its size, so the chain's operators keep to the counts below;
-  * a change that stacks another exchange or broadcast into one of them
-  * fails here. Inputs are built before counting, so each count is the
-  * operator's own work on them. */
-class RetrievalJobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
+/** Job budgets of the retrieval chain and the persisted hamming index on
+  * the sf0.001 fixture: every job an operator starts is counted, from
+  * building its DataFrame to running it to a no-op sink. Each scheduled
+  * job costs driver round trips whatever its size, so the operators keep
+  * to the counts below; a change that stacks another exchange or
+  * broadcast into one of them fails here. Inputs are built before
+  * counting, so each count is the operator's own work on them. */
+class RetrievalJobBudgetSpec extends AnyFunSuite with TempDirs {
 
   private val dir = "/root/testdata/sf0.001"
   private val started = new AtomicLong
@@ -98,5 +97,42 @@ class RetrievalJobBudgetSpec extends AnyFunSuite with BeforeAndAfterAll {
     q244(spark, dir) // registers the fixture views (schema reads are jobs too)
     val n = jobsOf(q244(spark, dir))
     assert(n <= 17, s"q244_retrieval_e2e ran $n jobs")
+  }
+
+  test("q221_hamming_index: at most 15 jobs from call to result") {
+    val q221 = SparkEntry.queries("q221_hamming_index")
+    q221(spark, dir) // registers the fixture views
+    val n = jobsOf(q221(spark, dir))
+    assert(n <= 15, s"q221_hamming_index ran $n jobs")
+  }
+
+  test("index probes broadcast only hash relations on one integral key") {
+    // a composite or non-integral key builds an UnsafeHashedRelation,
+    // which holds a whole Tungsten page however few rows it has
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.HashedRelationBroadcastMode
+    import org.apache.spark.sql.types.{IntegerType, LongType}
+    val hist = docs.where(col("doc_id") % 3 =!= 2)
+    val batch = docs.where(col("doc_id") % 3 === 2)
+    val ham = tempDir("budget_ham").toString + "/idx"
+    Dedup.writeSimhashIndex(hist, "doc_id", "text", ham, bands = 4)
+    val lsh = tempDir("budget_lsh").toString + "/idx"
+    Dedup.writeLshIndex(hist, "doc_id", "text", lsh, numHashes = 32, bands = 8)
+    for ((name, probe) <- Seq(
+        "hammingIndexPairs" -> Dedup.simhashIndexPairs(spark, ham, batch, "doc_id", "text"),
+        "lshIndexCandidates" -> Dedup.lshIndexCandidates(spark, lsh, batch, "doc_id", "text"))) {
+      probe.collect()
+      val modes = new AdaptiveSparkPlanHelper {}
+        .collectWithSubqueries(probe.queryExecution.executedPlan) {
+          case b: BroadcastExchangeExec => b.mode
+        }
+      assert(modes.nonEmpty, s"$name planned no broadcast (vacuous)")
+      modes.foreach {
+        case HashedRelationBroadcastMode(Seq(k), _) =>
+          assert(Set[Any](LongType, IntegerType)(k.dataType), s"$name broadcasts on $k")
+        case m => fail(s"$name broadcasts $m")
+      }
+    }
   }
 }
